@@ -287,80 +287,6 @@ object ScaleProbe {
       println(f"decon_spans sec=$tSpan%.3f ms_per_doc=${tSpan * 1000 / (n1 * 10)}%.4f")
       docsSpan10.unpersist()
     }
-    if (which("btbisect")) {
-      // stage-boundary timings for the backtest plan: kernel-only (compact
-      // perFold rows, no pin), exploded rows (pin + explode, no score join),
-      // and the full scored output
-      System.setProperty("graft.backtest.probe", "1")
-      ops.TsCvOp.backtestAutoBy(series10, "g", "ds", "y", 7, 2, "1d",
-        Map("method" -> "SeasonalNaive", "seasonal_period" -> "7"), "rmse")
-      def m3(run: => Double): Double = { run; val ts = Seq.fill(3)(run).sorted; ts(1) }
-      val tKernel = m3 {
-        ops.TsCvOp.backtestAutoBy(series10, "g", "ds", "y", 7, 2, "1d",
-          Map("method" -> "SeasonalNaive", "seasonal_period" -> "7"), "rmse")
-        onceDf(ops.TsCvOp.lastStages.perFold)
-      }
-      println(f"bt_kernel_only sec=$tKernel%.3f")
-      val tOut = m3 {
-        ops.TsCvOp.backtestAutoBy(series10, "g", "ds", "y", 7, 2, "1d",
-          Map("method" -> "SeasonalNaive", "seasonal_period" -> "7"), "rmse")
-        onceDf(ops.TsCvOp.lastStages.out)
-      }
-      println(f"bt_out_no_score sec=$tOut%.3f")
-      val tFull = m3(onceDf(ops.TsCvOp.backtestAutoBy(series10, "g", "ds", "y", 7, 2, "1d",
-        Map("method" -> "SeasonalNaive", "seasonal_period" -> "7"), "rmse")))
-      println(f"bt_full sec=$tFull%.3f")
-      // construction alone (the fold-score collect job, incl. pin
-      // materialization) vs the downstream output job
-      def m3v(run: => Double): Double = { run; val ts = Seq.fill(3)(run).sorted; ts(1) }
-      val tCons = m3v {
-        val t0 = System.nanoTime()
-        ops.TsCvOp.backtestAutoBy(series10, "g", "ds", "y", 7, 2, "1d",
-          Map("method" -> "SeasonalNaive", "seasonal_period" -> "7"), "rmse")
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"bt_construct_only sec=$tCons%.3f")
-      // gather-only floor: the same groupBy+sort_array+collect_list the
-      // backtest (and forecastBy) pays, with no kernel on top
-      val tGather = m3v(onceDf(graft.ops.Series.gather(series10, "g", "ds", "y")))
-      println(f"bt_gather_only sec=$tGather%.3f")
-      // alternative gather shape: one raw-row shuffle + per-partition sort +
-      // run assembly (no partial collect_list buffers, no sort_array)
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types._
-      val altSchema = StructType(Seq(
-        StructField("g", LongType), StructField("_ts", ArrayType(LongType, false)),
-        StructField("_vs", ArrayType(DoubleType, false)),
-        StructField("_nu", ArrayType(BooleanType, false))))
-      def altGather = {
-        val prepped = series10
-          .select(col("g").cast(LongType).as("g"),
-            unix_micros(col("ds").cast(TimestampType)).as("t"),
-            coalesce(col("y").cast(DoubleType), lit(Double.NaN)).as("v"),
-            col("y").isNull.as("nu"))
-          .repartition(32, col("g"))
-          .sortWithinPartitions(col("g"), col("t"))
-        val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(altSchema)
-        prepped.mapPartitions { it =>
-          new Iterator[Row] {
-            var cur: Row = if (it.hasNext) it.next() else null
-            def hasNext: Boolean = cur != null
-            def next(): Row = {
-              val g = cur.getLong(0)
-              val ts = Array.newBuilder[Long]; val vs = Array.newBuilder[Double]
-              val nu = Array.newBuilder[Boolean]
-              while (cur != null && cur.getLong(0) == g) {
-                ts += cur.getLong(1); vs += cur.getDouble(2); nu += cur.getBoolean(3)
-                cur = if (it.hasNext) it.next() else null
-              }
-              Row(g, ts.result(), vs.result(), nu.result())
-            }
-          }
-        }(enc)
-      }
-      val tAlt = m3v(onceDf(altGather))
-      println(f"bt_gather_alt sec=$tAlt%.3f")
-    }
     if (which("dedupagainst")) {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       val n1 = docs.count()

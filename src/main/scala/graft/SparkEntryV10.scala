@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.kernels.{Imputation, SeasonalityExt}
+import graft.kernels.SeasonalityExt
 import graft.ops.{Series, TsChangepointOp, TsDecompositionOp, TsExogOp, TsForecastOp}
 
 /** Tenth batch: planted-construction oracles for the changepoint surface
@@ -157,15 +157,10 @@ object SparkEntryV10 {
     // pure sinusoid: each 2-period window decomposes with ~zero remainder,
     // so every windowed strength clears the 0.3 seasonality threshold
     "ts_seasonality_changes_by" -> ((s, dir) => {
-      val chUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-        val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        if (clean.length < 14 || clean.exists(_.isNaN)) Seq.empty[Double]
-        else SeasonalityExt.detectChanges(clean, 7)._2.toSeq
-      })
-      Series.gather(sinusoid7(s, dir), "g", "ds", "y")
-        .select(col("g"), posexplode(chUdf(col("_vs"), col("_nu"))))
-        .select(col("g"), col("pos").as("window_index"),
-          (col("col") >= 0.3).as("seasonal"))
+      Series.flatMapSeries(sinusoid7(s, dir), "g", "ds", "y")(a =>
+        a.clean(14).toSeq.flatMap(SeasonalityExt.detectChanges(_, 7)._2.zipWithIndex))
+        .select(col("g"), col("_o._2").as("window_index"),
+          (col("_o._1") >= 0.3).as("seasonal"))
     }),
   )
 

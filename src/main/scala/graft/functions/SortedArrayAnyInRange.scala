@@ -17,17 +17,19 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
   * `g×` rows per duplicated window and collect_set-ed the expansion; the
   * starts carry the same information at 1/g the rows). The caller must
   * sort the array ascending (`sort_array`) — this expression assumes it
-  * and does not verify. Null elements are not supported. */
+  * and does not verify. The element type must be non-nullable
+  * (`collect_set` output is): a possibly-null array fails analysis rather
+  * than reading a null slot as a number. */
 case class SortedArrayAnyInRange(first: Expression, second: Expression,
                                  third: Expression)
     extends TernaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), LongType, LongType) =>
+      case (ArrayType(LongType, false), LongType, LongType) =>
         TypeCheckResult.TypeCheckSuccess
       case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (ARRAY<BIGINT> sorted, BIGINT lo, BIGINT hi), " +
+        s"$prettyName requires (ARRAY<BIGINT NOT NULL> sorted, BIGINT lo, BIGINT hi), " +
           s"got ${first.dataType.simpleString}, ${second.dataType.simpleString}" +
           s" and ${third.dataType.simpleString}")
     }

@@ -190,8 +190,7 @@ object Forecast {
 
     val period: Int =
       if (opts.autoDetectSeasonality && opts.seasonalPeriod == 0)
-        (try Seasonality.detectSeasonality(clean, None).headOption.getOrElse(1)
-        catch { case _: Throwable => 1 })
+        Seasonality.primaryPeriodOr1(clean)
       else if (opts.seasonalPeriod > 0) opts.seasonalPeriod
       else 1
 

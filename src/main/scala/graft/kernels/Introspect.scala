@@ -25,9 +25,7 @@ object Introspect {
     if (clean.length < 3) throw new Forecast.InsufficientData(3, clean.length)
     val period =
       if (opts.seasonalPeriod > 0) opts.seasonalPeriod
-      else if (opts.autoDetectSeasonality)
-        (try Seasonality.detectSeasonality(clean, None).headOption.getOrElse(1)
-        catch { case _: Throwable => 1 })
+      else if (opts.autoDetectSeasonality) Seasonality.primaryPeriodOr1(clean)
       else 1
     // multi-seasonal effective periods (forecast.rs:1843-1866: explicit list,
     // else the detected period, else MSTL's [12] fallback)
@@ -97,8 +95,7 @@ object Introspect {
     if (clean.length < 3) throw new Forecast.InsufficientData(3, clean.length)
     val period =
       if (opts.seasonalPeriod > 0) opts.seasonalPeriod
-      else (try Seasonality.detectSeasonality(clean, None).headOption.getOrElse(1)
-      catch { case _: Throwable => 1 })
+      else Seasonality.primaryPeriodOr1(clean)
     val n = clean.length
     val steps = (1 to horizon).toSeq
 

@@ -1,5 +1,7 @@
 package graft.kernels
 
+import scala.util.control.NonFatal
+
 /** Multi-seasonal and distributional forecast kernels: MSTL-forecast
   * (decompose → forecast trend+remainder → re-add cyclic seasonals),
   * MFLES (gradient-boosted decomposition per Nixtla's published method,
@@ -249,7 +251,7 @@ object MultiSeasonal {
         var i = 0
         while (i < hv) { s += math.abs(tail(i) - fc(i)); i += 1 }
         if (s.isNaN) Double.MaxValue else s
-      } catch { case _: Throwable => Double.MaxValue }
+      } catch { case NonFatal(_) => Double.MaxValue }
     }
     best(values, horizon)
   }
@@ -329,7 +331,7 @@ object MultiSeasonal {
               }
             }
             if (s.isNaN) Double.MaxValue else s
-          } catch { case _: Throwable => Double.MaxValue }
+          } catch { case NonFatal(_) => Double.MaxValue }
         var best = (0, false)
         var bestScore = holdoutMae(0, smooth = false)
         for (ti <- trendCands.indices; smooth <- Seq(false, true)

@@ -37,6 +37,16 @@ object Periods {
     case _ => "fft"
   }
 
+  /** Fewest points the (parsed) method accepts; shorter series are a data
+    * error, not a query error (the estimators' length `require`s). */
+  def minLength(method: String): Int = parseMethod(method) match {
+    case "cfd_autoperiod" => 5
+    case "aic" => 8
+    case "ssa" | "stl" | "sazed" => 16
+    case "matrix_profile" => 32
+    case _ => 4
+  }
+
   // ------------------------------------------------------------ single estimators
 
   /** Periodogram peak: (period, frequency, power, confidence = peak/mean power). */

@@ -1,5 +1,7 @@
 package graft.kernels
 
+import scala.util.control.NonFatal
+
 /** Seasonality detection kernels.
   * detectSeasonality matches reference seasonality.rs:323-377: ACF local
   * peaks above 0.1, sorted by ACF strength, top 5.
@@ -29,6 +31,12 @@ object Seasonality {
     }
     out
   }
+
+  /** The strongest detected period, or 1 (non-seasonal) when none is found
+    * or the series is too short to test — the models' auto-period default. */
+  def primaryPeriodOr1(values: Array[Double]): Int =
+    try detectSeasonality(values, None).headOption.getOrElse(1)
+    catch { case NonFatal(_) => 1 }
 
   /** Candidate seasonal periods, strongest first (seasonality.rs:323-377).
     * Returns empty for constant or too-short series. */

@@ -1,5 +1,7 @@
 package graft.llm
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -155,7 +157,7 @@ object MultimodalOps {
           try {
             val (w, h, luma) = StubCodec.decodeImage(payload)
             Seq[Any](w, h, luma)
-          } catch { case _: Throwable => Seq(null, null, null) }
+          } catch { case NonFatal(_) => Seq(null, null, null) }
         Row.fromSeq(r.toSeq ++ out)
       }
     }(enc)
@@ -183,7 +185,7 @@ object MultimodalOps {
         val payload = if (r.isNullAt(binIdx)) null else r.getAs[Array[Byte]](binIdx)
         val resized =
           try StubCodec.resizeImage(payload, targetW, targetH)
-          catch { case _: Throwable => Array.emptyByteArray }
+          catch { case NonFatal(_) => Array.emptyByteArray }
         val seq = r.toSeq.toArray
         seq(binIdx) = resized
         if (metaIdx >= 0 && !r.isNullAt(metaIdx)) {

@@ -1,8 +1,12 @@
 package graft.ops
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.kernels.{Forecast, Imputation}
 
 /** Series gathering and date-type plumbing shared by the grouped operators.
   *
@@ -17,6 +21,13 @@ import org.apache.spark.sql.types._
   * to epoch micros (raw value for integer columns), with the original type
   * restored in outputs (DateColumnType contract, ts_fill_gaps_native.hpp:12-17,
   * ts_forecast_native.cpp:406-424).
+  *
+  * Per-series operators run through ONE runner ([[mapSeries]] /
+  * [[flatMapSeries]]), the reference `_by` lifecycle (ts_macros.cpp:575-602):
+  * gather → one kernel call per group → unnest. The runner owns the gather,
+  * the single UDF, the explode and the per-group error contract
+  * ([[skipOnDataError]]); an op supplies only its kernel and its output
+  * projection.
   */
 object Series {
 
@@ -72,5 +83,46 @@ object Series {
         coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
         col(yCol).isNull.as("nu")))).as("_s"))
       .select(col(groupCol), col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
+  }
+
+  /** One gathered series as a kernel sees it, built once per group:
+    * epoch-micros timestamps, values (NaN where null) and the validity mask. */
+  final case class Arrays(ts: Array[Long], vs: Array[Double], valid: Array[Boolean]) {
+    /** The values with interior gaps linearly interpolated. */
+    def interpolated: Array[Double] = Imputation.fillInterpolate(vs, valid)
+
+    /** The shared kernel guard: the interpolated values, or None (skip the
+      * group) when NaN remains or fewer than `minLen` points are left. */
+    def clean(minLen: Int = 0): Option[Array[Double]] = {
+      val c = interpolated
+      if (c.length < minLen || c.exists(_.isNaN)) None else Some(c)
+    }
+  }
+
+  /** The per-group error contract (ts_forecast_native.cpp:666-672): a data
+    * error (insufficient data, computation failure) skips the group; any
+    * other exception — invalid input or model, a bug — propagates and fails
+    * the query. The one place this contract is written. */
+  def skipOnDataError[A](body: => A): Option[A] =
+    try Some(body)
+    catch { case _: Forecast.InsufficientData | _: Forecast.ComputationError => None }
+
+  /** One output row `(g, _o)` per group; groups whose kernel returns None
+    * or raises a data error are dropped. */
+  def mapSeries[O: TypeTag](df: DataFrame, g: String, ds: String, y: String)(
+      k: Arrays => Option[O]): DataFrame =
+    flatMapSeries(df, g, ds, y)(s => k(s).toSeq)
+
+  /** Fan-out: one output row `(g, _o)` per element the kernel returns; a
+    * group raising a data error contributes no rows. Drops are an explode of
+    * an empty array, never a null filter: Catalyst pushes `isNotNull(_o)`
+    * below the projection that computes `_o` and so runs the kernel twice
+    * per group. */
+  def flatMapSeries[O: TypeTag](df: DataFrame, g: String, ds: String, y: String)(
+      k: Arrays => Seq[O]): DataFrame = {
+    val kernel = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) =>
+      skipOnDataError(k(Arrays(ts.toArray, vs.toArray, nu.map(!_).toArray))).getOrElse(Nil))
+    gather(df, g, ds, y)
+      .select(col(g), explode(kernel(col("_ts"), col("_vs"), col("_nu"))).as("_o"))
   }
 }

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.kernels.Changepoint
 
@@ -19,57 +18,40 @@ object TsChangepointOp {
                            hazardLambda: Double = 250.0,
                            includeProbabilities: Boolean = true): DataFrame = {
     val dsType = df.schema(dsCol).dataType
-    val cpUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      try {
-        val clean = graft.kernels.Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        val r = Changepoint.bocpd(clean, hazardLambda, includeProbabilities)
-        Some(ts.indices.map(i => CpRow(ts(i), vs(i), r.isChangepoint(i), r.probability(i))))
-      } catch { case _: graft.kernels.Forecast.FcError => None }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(cpUdf(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
-      .select(col(groupCol),
-        Series.fromMicros(col("_r.t"), dsType).as(dsCol),
-        when(!isnan(col("_r.y")), col("_r.y")).as(yCol),
-        col("_r.is_changepoint").as("is_changepoint"),
-        col("_r.changepoint_probability").as("changepoint_probability"))
+    Series.flatMapSeries(df, groupCol, dsCol, yCol) { s =>
+      val r = Changepoint.bocpd(s.interpolated, hazardLambda, includeProbabilities)
+      s.ts.indices.map(i => CpRow(s.ts(i), s.vs(i), r.isChangepoint(i), r.probability(i)))
+    }.select(col(groupCol),
+        Series.fromMicros(col("_o.t"), dsType).as(dsCol),
+        when(!isnan(col("_o.y")), col("_o.y")).as(yCol),
+        col("_o.is_changepoint").as("is_changepoint"),
+        col("_o.changepoint_probability").as("changepoint_probability"))
   }
 
   /** detect_changepoints_bayesian (changepoint.rs:360): legacy Bayesian API —
     * BOCPD with hazard λ = 1 / max(hazard_rate, 0.001), changepoint indices
     * only. Output: (group, changepoint_index, ds at index). */
   def bayesianBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
-                 hazardRate: Double = 0.004): DataFrame = {
-    val dsType = df.schema(dsCol).dataType
-    val cpUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      try {
-        val clean = graft.kernels.Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        val r = Changepoint.bocpd(clean, 1.0 / math.max(hazardRate, 0.001),
-          includeProbabilities = false)
-        r.changepoints.toSeq.map(i => (i, ts(i)))
-      } catch { case _: graft.kernels.Forecast.FcError => Seq.empty[(Int, Long)] }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(cpUdf(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
-      .select(col(groupCol), col("_r._1").as("changepoint_index"),
-        Series.fromMicros(col("_r._2"), dsType).as(dsCol))
-  }
+                 hazardRate: Double = 0.004): DataFrame =
+    indicesBy(df, groupCol, dsCol, yCol)(s =>
+      Changepoint.bocpd(s.interpolated, 1.0 / math.max(hazardRate, 0.001),
+        includeProbabilities = false).changepoints.toSeq)
 
   /** PELT changepoints per group: (group, changepoint_index, ds at index). */
   def peltBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
              costFn: String = "l2", minSize: Int = 2,
              penalty: Option[Double] = None): DataFrame = {
+    val cost = Changepoint.Cost.parse(costFn)
+    indicesBy(df, groupCol, dsCol, yCol)(s =>
+      s.clean().toSeq.flatMap(c => Changepoint.pelt(c, minSize, penalty, cost).toSeq))
+  }
+
+  /** (group, changepoint_index, ds at index) for the indices `k` returns. */
+  private def indicesBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String)(
+      k: Series.Arrays => Seq[Int]): DataFrame = {
     val dsType = df.schema(dsCol).dataType
-    val cpUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = graft.kernels.Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.exists(_.isNaN)) Seq.empty[(Int, Long)]
-      else Changepoint.pelt(clean, minSize, penalty, Changepoint.Cost.parse(costFn))
-        .map(i => (i, ts(i))).toSeq
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(cpUdf(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
-      .select(col(groupCol),
-        col("_r._1").as("changepoint_index"),
-        Series.fromMicros(col("_r._2"), dsType).as(dsCol))
+    Series.flatMapSeries(df, groupCol, dsCol, yCol)(s => k(s).map(i => (i, s.ts(i))))
+      .select(col(groupCol), col("_o._1").as("changepoint_index"),
+        Series.fromMicros(col("_o._2"), dsType).as(dsCol))
   }
 }

@@ -129,14 +129,10 @@ object TsCvOp {
         col(yCol).isNull.as("nu")))).as("_s"))
       .join(testCounts, Seq("fold_id", groupCol))
 
-    val fcUdf = udf((vs: Seq[Double], nu: Seq[Boolean], h: Int) => {
-      try {
-        val out = Forecast.forecast(vs.toArray, nu.map(!_).toArray, opts.copy(horizon = h))
-        Some((0 until out.point.length).map(i =>
-          CvFcStep(i + 1, out.point(i), out.lower(i), out.upper(i), out.modelName)))
-      } catch {
-        case _: Forecast.InsufficientData | _: Forecast.ComputationError => None
-      }
+    val fcUdf = udf((vs: Seq[Double], nu: Seq[Boolean], h: Int) => Series.skipOnDataError {
+      val out = Forecast.forecast(vs.toArray, nu.map(!_).toArray, opts.copy(horizon = h))
+      (0 until out.point.length).map(i =>
+        CvFcStep(i + 1, out.point(i), out.lower(i), out.upper(i), out.modelName))
     })
 
     val preds = gathered
@@ -262,13 +258,11 @@ object TsCvOp {
             i += 1
           }
           val h = (testEnd - testStart + 1).toInt
-          try {
-            val o = Forecast.forecast(vb.result(), kb.result(), opts.copy(horizon = h))
+          Series.skipOnDataError(Forecast.forecast(vb.result(), kb.result(),
+              opts.copy(horizon = h))).foreach { o =>
             acc += BtFoldFc(f, testStart, testEnd, o.modelName,
               (0 until o.point.length).map(j =>
                 BtStep(o.point(j), o.lower(j), o.upper(j))))
-          } catch {
-            case _: Forecast.InsufficientData | _: Forecast.ComputationError => ()
           }
         }
         f += 1
@@ -338,12 +332,9 @@ object TsCvOp {
       case (acc, (f, sc)) => when(col("fold_id") === f,
         sc.map(lit(_)).getOrElse(lit(null).cast(DoubleType))).otherwise(acc)
     }
-    val full = out
-      .select(col("fold_id"), col(groupCol), col(dsCol), col("yhat"), col("actual"),
-        col("error"), col("abs_error"), col("yhat_lower"), col("yhat_upper"),
-        col("model_name"), scoreCol.as("fold_metric_score"))
-    if (probeEnabled) lastStages = BacktestStages(perFold, pinned, out, full)
-    full
+    out.select(col("fold_id"), col(groupCol), col(dsCol), col("yhat"), col("actual"),
+      col("error"), col("abs_error"), col("yhat_lower"), col("yhat_upper"),
+      col("model_name"), scoreCol.as("fold_metric_score"))
   }
 
   /** Fold-level metric computed from the COMPACT pinned rows: per
@@ -428,17 +419,6 @@ object TsCvOp {
       (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
     }
   }
-
-  /** Probe-only view of [[backtestAutoBy]]'s internal stages (the compact
-    * kernel output, its pin, the exploded rows, the scored result) so a
-    * bench harness can time each boundary. Captured ONLY when
-    * `-Dgraft.backtest.probe=1` (the ScaleProbe harness sets it): holding
-    * the pin-backed plans in a static field would otherwise keep each
-    * production call's checkpoint blocks referenced until the next call. */
-  private[graft] case class BacktestStages(perFold: DataFrame, pinned: DataFrame,
-                                           out: DataFrame, full: DataFrame)
-  private def probeEnabled: Boolean = sys.props.get("graft.backtest.probe").contains("1")
-  @volatile private[graft] var lastStages: BacktestStages = null
 
   /** ts_cv_split_by (ts_macros.cpp:1203 → _ts_cv_split_native): explicit
     * `trainingEndTimes` cutoffs; per fold, train = rows at/before the

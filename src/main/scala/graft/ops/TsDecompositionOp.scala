@@ -2,9 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.kernels.{Decomposition, Detrend, Imputation, Peaks, Periods}
+import graft.kernels.{Decomposition, Detrend, Peaks, Periods, SeasonalityExt}
 
 /** Decomposition / detrend / period / peak operators (reference
   * ts_macros.cpp:419-538, :1890-2015; ts_decomposition.cpp; ts_detrend.cpp;
@@ -21,28 +20,24 @@ object TsDecompositionOp {
                           periods: Seq[Int], insufficientData: String = "skip"): DataFrame = {
     val dsType = df.schema(dsCol).dataType
     val minLen = 2 * periods.max
-    val udfF = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < minLen || clean.exists(_.isNaN)) {
-        insufficientData match {
-          case "skip" => None
-          case "nan" => Some(ts.indices.map(i =>
-            DecompRow(ts(i), vs(i), Double.NaN, Double.NaN, Double.NaN)))
+    Series.flatMapSeries(df, groupCol, dsCol, yCol) { s =>
+      s.clean(minLen) match {
+        case Some(clean) =>
+          val r = Decomposition.mstl(clean, periods)
+          val totalSeasonal = Array.tabulate(clean.length)(i => r.seasonals.map(_._2(i)).sum)
+          s.ts.indices.map(i =>
+            DecompRow(s.ts(i), clean(i), r.trend(i), totalSeasonal(i), r.remainder(i)))
+        case None => insufficientData match {
+          case "skip" => Nil
+          case "nan" => s.ts.indices.map(i =>
+            DecompRow(s.ts(i), s.vs(i), Double.NaN, Double.NaN, Double.NaN))
           case _ => throw new IllegalArgumentException(
-            s"mstl: series too short (need $minLen, got ${clean.length})")
+            s"mstl: series too short (need $minLen, got ${s.interpolated.length})")
         }
-      } else {
-        val r = Decomposition.mstl(clean, periods)
-        val totalSeasonal = Array.tabulate(clean.length)(i => r.seasonals.map(_._2(i)).sum)
-        Some(ts.indices.map(i =>
-          DecompRow(ts(i), clean(i), r.trend(i), totalSeasonal(i), r.remainder(i))))
       }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(udfF(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
-      .select(col(groupCol), Series.fromMicros(col("_r.t"), dsType).as(dsCol),
-        col("_r.y").as(yCol), col("_r.trend").as("trend"),
-        col("_r.seasonal").as("seasonal"), col("_r.remainder").as("remainder"))
+    }.select(col(groupCol), Series.fromMicros(col("_o.t"), dsType).as(dsCol),
+        col("_o.y").as(yCol), col("_o.trend").as("trend"),
+        col("_o.seasonal").as("seasonal"), col("_o.remainder").as("remainder"))
   }
 
   /** ts_decompose_seasonal (classical additive/multiplicative, reference
@@ -57,20 +52,15 @@ object TsDecompositionOp {
       s"method must be additive|multiplicative, got '$method'")
     val dsType = df.schema(dsCol).dataType
     val mult = method == "multiplicative"
-    val udfF = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 2 * math.max(period, 2) || clean.exists(_.isNaN)) None
-      else {
+    Series.flatMapSeries(df, groupCol, dsCol, yCol) { s =>
+      s.clean(2 * math.max(period, 2)).toSeq.flatMap { clean =>
         val r = Decomposition.classical(clean, period, mult)
-        Some(ts.indices.map(i =>
-          DecompRow(ts(i), clean(i), r.trend(i), r.seasonal(i), r.remainder(i))))
+        s.ts.indices.map(i =>
+          DecompRow(s.ts(i), clean(i), r.trend(i), r.seasonal(i), r.remainder(i)))
       }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(udfF(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
-      .select(col(groupCol), Series.fromMicros(col("_r.t"), dsType).as(dsCol),
-        col("_r.y").as(yCol), col("_r.trend").as("trend"),
-        col("_r.seasonal").as("seasonal"), col("_r.remainder").as("remainder"),
+    }.select(col(groupCol), Series.fromMicros(col("_o.t"), dsType).as(dsCol),
+        col("_o.y").as(yCol), col("_o.trend").as("trend"),
+        col("_o.seasonal").as("seasonal"), col("_o.remainder").as("remainder"),
         lit(period).as("period"), lit(method).as("method"))
   }
 
@@ -81,18 +71,10 @@ object TsDecompositionOp {
   def detrendBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                 method: String = "auto"): DataFrame = {
     val dsType = df.schema(dsCol).dataType
-    val udfF = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 4 || clean.exists(_.isNaN)) None
-      else {
-        val r = Detrend.detrend(clean, method)
-        Some((r.method, ts.indices.map(i => DetrendRow(ts(i), clean(i), r.trend(i), r.detrended(i)))))
-      }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), udfF(col("_ts"), col("_vs"), col("_nu")).as("_o"))
-      .filter(col("_o").isNotNull)
-      .select(col(groupCol), col("_o._1").as("method"), explode(col("_o._2")).as("_r"))
+    Series.mapSeries(df, groupCol, dsCol, yCol)(s => s.clean(4).map { clean =>
+      val r = Detrend.detrend(clean, method)
+      (r.method, s.ts.indices.map(i => DetrendRow(s.ts(i), clean(i), r.trend(i), r.detrended(i))))
+    }).select(col(groupCol), col("_o._1").as("method"), explode(col("_o._2")).as("_r"))
       .select(col(groupCol), Series.fromMicros(col("_r.t"), dsType).as(dsCol),
         col("_r.y").as(yCol), col("_r.trend").as("trend"),
         col("_r.detrended").as("detrended"), col("method"))
@@ -102,14 +84,9 @@ object TsDecompositionOp {
   def detectPeriodsBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                       method: String = "fft", maxPeriod: Option[Int] = None,
                       minConfidence: Option[Double] = None): DataFrame = {
-    val udfF = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 4 || clean.exists(_.isNaN)) None
-      else scala.util.Try(Periods.detectPeriods(clean, method, maxPeriod, minConfidence)).toOption
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), udfF(col("_vs"), col("_nu")).as("_o"))
-      .filter(col("_o").isNotNull)
+    val minLen = Periods.minLength(method)
+    Series.mapSeries(df, groupCol, dsCol, yCol)(s =>
+      s.clean(minLen).map(Periods.detectPeriods(_, method, maxPeriod, minConfidence)))
       .select(col(groupCol), col("_o.primaryPeriod").as("primary_period"),
         col("_o.method").as("method"), explode_outer(col("_o.periods")).as("_p"))
       .select(col(groupCol), col("primary_period"), col("method"),
@@ -124,30 +101,19 @@ object TsDecompositionOp {
                     minDistance: Option[Double] = None,
                     minProminence: Option[Double] = None): DataFrame = {
     val dsType = df.schema(dsCol).dataType
-    val udfF = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 3 || clean.exists(_.isNaN)) Seq.empty[PeakRow]
-      else Peaks.detectPeaks(clean, minDistance, minProminence)
-        .map(p => PeakRow(p.index, ts(p.index), p.value, p.prominence))
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(udfF(col("_ts"), col("_vs"), col("_nu"))).as("_p"))
-      .select(col(groupCol), col("_p.index").as("peak_index"),
-        Series.fromMicros(col("_p.t"), dsType).as(dsCol),
-        col("_p.value").as("peak_value"), col("_p.prominence").as("prominence"))
+    Series.flatMapSeries(df, groupCol, dsCol, yCol)(s =>
+      s.clean(3).toSeq.flatMap(Peaks.detectPeaks(_, minDistance, minProminence)
+        .map(p => PeakRow(p.index, s.ts(p.index), p.value, p.prominence))))
+      .select(col(groupCol), col("_o.index").as("peak_index"),
+        Series.fromMicros(col("_o.t"), dsType).as(dsCol),
+        col("_o.value").as("peak_value"), col("_o.prominence").as("prominence"))
   }
 
   /** ts_analyze_peak_timing_by. */
   def analyzePeakTimingBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                           period: Double): DataFrame = {
-    val udfF = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 3 || clean.exists(_.isNaN)) None
-      else Some(Peaks.analyzePeakTiming(clean, period))
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), udfF(col("_vs"), col("_nu")).as("_o"))
-      .filter(col("_o").isNotNull)
+    Series.mapSeries(df, groupCol, dsCol, yCol)(s =>
+      s.clean(3).map(Peaks.analyzePeakTiming(_, period)))
       .select(col(groupCol), col("_o.meanInterval").as("mean_interval"),
         col("_o.intervalStd").as("interval_std"),
         col("_o.timingVariability").as("timing_variability"),
@@ -159,20 +125,14 @@ object TsDecompositionOp {
     * strength. Groups shorter than 4 clean points are skipped. */
   def analyzeSeasonalityBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                            maxPeriod: Option[Int] = None): DataFrame = {
-    val u = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 4 || clean.exists(_.isNaN)) None
-      else Some(graft.kernels.SeasonalityExt.analyze(clean, maxPeriod))
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), u(col("_vs"), col("_nu")).as("_a"))
-      .filter(col("_a").isNotNull)
-      .select(col(groupCol), col("_a.periods").as("periods"),
-        col("_a.strengths").as("strengths"),
-        col("_a.primary_period").as("primary_period"),
-        col("_a.trend_strength").as("trend_strength"),
-        col("_a.seasonal_strength").as("seasonal_strength"),
-        col("_a.is_seasonal").as("is_seasonal"))
+    Series.mapSeries(df, groupCol, dsCol, yCol)(s =>
+      s.clean(4).map(SeasonalityExt.analyze(_, maxPeriod)))
+      .select(col(groupCol), col("_o.periods").as("periods"),
+        col("_o.strengths").as("strengths"),
+        col("_o.primary_period").as("primary_period"),
+        col("_o.trend_strength").as("trend_strength"),
+        col("_o.seasonal_strength").as("seasonal_strength"),
+        col("_o.is_seasonal").as("is_seasonal"))
   }
 
   /** ts_classify_seasonality_by (ts_macros.cpp:461; seasonality_ext timing
@@ -180,21 +140,15 @@ object TsDecompositionOp {
     * fixed period. Groups shorter than two full cycles are skipped. */
   def classifySeasonalityBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                             period: Int): DataFrame = {
-    val u = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.length < 2 * period || clean.exists(_.isNaN)) None
-      else Some(graft.kernels.SeasonalityExt.classify(clean, period))
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), u(col("_vs"), col("_nu")).as("_c"))
-      .filter(col("_c").isNotNull)
-      .select(col(groupCol), col("_c.timing_classification").as("timing_classification"),
-        col("_c.modulation_type").as("modulation_type"),
-        col("_c.has_stable_timing").as("has_stable_timing"),
-        col("_c.timing_variability").as("timing_variability"),
-        col("_c.seasonal_strength").as("seasonal_strength"),
-        col("_c.is_seasonal").as("is_seasonal"),
-        col("_c.cycle_strengths").as("cycle_strengths"),
-        col("_c.weak_seasons").as("weak_seasons"))
+    Series.mapSeries(df, groupCol, dsCol, yCol)(s =>
+      s.clean(2 * period).map(SeasonalityExt.classify(_, period)))
+      .select(col(groupCol), col("_o.timing_classification").as("timing_classification"),
+        col("_o.modulation_type").as("modulation_type"),
+        col("_o.has_stable_timing").as("has_stable_timing"),
+        col("_o.timing_variability").as("timing_variability"),
+        col("_o.seasonal_strength").as("seasonal_strength"),
+        col("_o.is_seasonal").as("is_seasonal"),
+        col("_o.cycle_strengths").as("cycle_strengths"),
+        col("_o.weak_seasons").as("weak_seasons"))
   }
 }

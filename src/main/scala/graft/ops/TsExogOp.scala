@@ -61,44 +61,40 @@ object TsExogOp {
 
     val k = xregCols.length
     val fcUdf = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean],
-                     xs: Seq[Seq[Double]], futX: Seq[Seq[Double]]) => {
-      try {
-        if (useExog && futX.length < horizon)
-          throw new Forecast.InvalidInput(
-            s"future exogenous rows (${futX.length}) < horizon ($horizon)")
-        val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-        if (clean.length < 3) throw new Forecast.InsufficientData(3, clean.length)
-        val lastT = ts.last
-        if (!useExog) {
-          // non-exog-capable model or no regressors: standard forecast
-          val out = Forecast.forecast(clean, Array.fill(clean.length)(true), opts)
-          Some((0 until horizon).map { h =>
-            ExogStep(h + 1, freq.advance(lastT, h + 1L),
-              out.point(h), out.lower(h), out.upper(h), out.modelName)
-          })
-        } else {
-          // regress out X (OLS with intercept), model the residuals, add back
-          val n = clean.length
-          val design = Array.tabulate(n, k + 1)((i, j) => if (j == 0) 1.0 else xs(i)(j - 1))
-          val beta = Linalg.olsSolve(design, clean)
-          val residuals = Array.tabulate(n) { i =>
-            var pred = beta(0)
-            var j = 0
-            while (j < k) { pred += beta(j + 1) * xs(i)(j); j += 1 }
-            clean(i) - pred
-          }
-          val out = Forecast.forecast(residuals, Array.fill(n)(true), opts)
-          Some((0 until horizon).map { h =>
-            var xb = beta(0)
-            var j = 0
-            while (j < k) { xb += beta(j + 1) * futX(h)(j); j += 1 }
-            ExogStep(h + 1, freq.advance(lastT, h + 1L),
-              out.point(h) + xb, out.lower(h) + xb, out.upper(h) + xb,
-              exogName.get)
-          })
+                     xs: Seq[Seq[Double]], futX: Seq[Seq[Double]]) => Series.skipOnDataError {
+      if (useExog && futX.length < horizon)
+        throw new Forecast.InvalidInput(
+          s"future exogenous rows (${futX.length}) < horizon ($horizon)")
+      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
+      if (clean.length < 3) throw new Forecast.InsufficientData(3, clean.length)
+      val lastT = ts.last
+      if (!useExog) {
+        // non-exog-capable model or no regressors: standard forecast
+        val out = Forecast.forecast(clean, Array.fill(clean.length)(true), opts)
+        (0 until horizon).map { h =>
+          ExogStep(h + 1, freq.advance(lastT, h + 1L),
+            out.point(h), out.lower(h), out.upper(h), out.modelName)
         }
-      } catch {
-        case _: Forecast.InsufficientData | _: Forecast.ComputationError => None
+      } else {
+        // regress out X (OLS with intercept), model the residuals, add back
+        val n = clean.length
+        val design = Array.tabulate(n, k + 1)((i, j) => if (j == 0) 1.0 else xs(i)(j - 1))
+        val beta = Linalg.olsSolve(design, clean)
+        val residuals = Array.tabulate(n) { i =>
+          var pred = beta(0)
+          var j = 0
+          while (j < k) { pred += beta(j + 1) * xs(i)(j); j += 1 }
+          clean(i) - pred
+        }
+        val out = Forecast.forecast(residuals, Array.fill(n)(true), opts)
+        (0 until horizon).map { h =>
+          var xb = beta(0)
+          var j = 0
+          while (j < k) { xb += beta(j + 1) * futX(h)(j); j += 1 }
+          ExogStep(h + 1, freq.advance(lastT, h + 1L),
+            out.point(h) + xb, out.lower(h) + xb, out.upper(h) + xb,
+            exogName.get)
+        }
       }
     })
 

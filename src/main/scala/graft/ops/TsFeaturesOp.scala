@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.kernels.{Features, Imputation}
+import graft.kernels.Features
 
 /** Feature-extraction operators (reference ts_features.cpp:55 — one output
   * column per feature, named from the catalog; ts_features_list catalog fn
@@ -17,21 +17,13 @@ object TsFeaturesOp {
                  features: Seq[String] = Features.allNames): DataFrame = {
     val unknown = features.filterNot(Features.allNames.contains)
     require(unknown.isEmpty, s"Unknown feature(s): ${unknown.mkString(", ")}")
-    val fUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      val clean = Imputation.fillInterpolate(vs.toArray, nu.map(!_).toArray)
-      if (clean.exists(_.isNaN)) None
-      else {
-        val all = Features.extract(clean)
-        Some(features.map(all(_)))
-      }
-    })
-    val gathered = Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), fUdf(col("_vs"), col("_nu")).as("_f"))
-      .filter(col("_f").isNotNull)
     val cols = col(groupCol) +: features.zipWithIndex.map { case (name, i) =>
-      element_at(col("_f"), i + 1).as(name)
+      element_at(col("_o"), i + 1).as(name)
     }
-    gathered.select(cols: _*)
+    Series.mapSeries(df, groupCol, dsCol, yCol)(s => s.clean().map { clean =>
+      val all = Features.extract(clean)
+      features.map(all(_))
+    }).select(cols: _*)
   }
 
   /** ts_features_list (ts_features.cpp:160-246): the feature catalog in the

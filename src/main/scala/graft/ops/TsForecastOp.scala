@@ -1,8 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.kernels.Forecast
 import graft.types.Frequency
@@ -10,15 +9,14 @@ import graft.types.Frequency
 /** Grouped forecasting operators (`ts_forecast_by` family).
   *
   * Reference lifecycle (ts_macros.cpp:575-602 → _ts_forecast_scalar →
-  * Rust forecast): GROUP BY gather → per-group kernel → unnest. Spark shape:
-  * groupBy + collect_list (partial agg + shuffle on the group key) → kernel
-  * UDF per group → explode. One kernel invocation per series; parallelism
-  * scales with the number of series across executors.
+  * Rust forecast): GROUP BY gather → per-group kernel → unnest, run by
+  * `Series.mapSeries`/`flatMapSeries`. One kernel invocation per series;
+  * parallelism scales with the number of series across executors.
   *
-  * Error isolation contract (ts_forecast_native.cpp:666-672): per-group data
-  * errors (insufficient data, computation failures) skip the group; invalid
-  * model / invalid params abort the query — validated eagerly on the driver
-  * where data-independent.
+  * Error isolation contract (ts_forecast_native.cpp:666-672, enforced by the
+  * runner's `Series.skipOnDataError`): per-group data errors skip the group;
+  * invalid model / invalid params abort the query — validated eagerly on the
+  * driver where data-independent.
   */
 object TsForecastOp {
 
@@ -30,25 +28,6 @@ object TsForecastOp {
   final case class SingleOut(point_forecasts: Seq[Double], lower_bounds: Seq[Double],
                              upper_bounds: Seq[Double], model_name: String,
                              aic: Option[Double], bic: Option[Double])
-
-  /** Run the kernel for one gathered series; None ⇒ skip group. */
-  private def runKernel(ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean],
-                        opts: Forecast.Options, freq: Frequency): Option[Seq[FcStep]] = {
-    try {
-      val values = vs.toArray
-      val valid = nu.map(!_).toArray
-      val out = Forecast.forecast(values, valid, opts)
-      val lastT = ts.last
-      Some((0 until out.point.length).map { i =>
-        FcStep(i + 1, freq.advance(lastT, i + 1L), out.point(i), out.lower(i), out.upper(i),
-          out.modelName)
-      })
-    } catch {
-      case _: Forecast.InsufficientData => None
-      case _: Forecast.ComputationError => None
-      // InvalidInput / InvalidModel propagate and abort the query
-    }
-  }
 
   /** ts_forecast_by (ts_macros.cpp:575-602): per-group forecast.
     * Output: (groupCol, forecast_step, dsCol, yhat, yhat_lower, yhat_upper,
@@ -64,19 +43,21 @@ object TsForecastOp {
     val dsType = df.schema(dsCol).dataType
     val freq = Frequency.parse(frequency).forIntegerDs(Series.isIntegerDs(dsType))
 
-    val fc = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) =>
-      runKernel(ts, vs, nu, opts, freq))
-
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(fc(col("_ts"), col("_vs"), col("_nu"))).as("_r"))
-      .select(
+    Series.flatMapSeries(df, groupCol, dsCol, yCol) { s =>
+      val out = Forecast.forecast(s.vs, s.valid, opts)
+      val lastT = s.ts.last
+      (0 until out.point.length).map { i =>
+        FcStep(i + 1, freq.advance(lastT, i + 1L), out.point(i), out.lower(i), out.upper(i),
+          out.modelName)
+      }
+    }.select(
         col(groupCol),
-        col("_r.forecast_step").as("forecast_step"),
-        Series.fromMicros(col("_r.t"), dsType).as(dsCol),
-        col("_r.yhat").as("yhat"),
-        col("_r.yhat_lower").as("yhat_lower"),
-        col("_r.yhat_upper").as("yhat_upper"),
-        col("_r.model_name").as("model_name"))
+        col("_o.forecast_step").as("forecast_step"),
+        Series.fromMicros(col("_o.t"), dsType).as(dsCol),
+        col("_o.yhat").as("yhat"),
+        col("_o.yhat_lower").as("yhat_lower"),
+        col("_o.yhat_upper").as("yhat_upper"),
+        col("_o.model_name").as("model_name"))
   }
 
   /** ts_forecast_inspect_by (ts_macros.cpp:605-686): per-group fit-state
@@ -84,13 +65,8 @@ object TsForecastOp {
   def forecastInspectBy(df: DataFrame, groupCol: String, dsCol: String, yCol: String,
                         method: String, params: Map[String, String] = Map.empty): DataFrame = {
     val opts = Forecast.optionsFromParams(method, 1, params)
-    val insUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      try Some(graft.kernels.Introspect.inspect(vs.toArray, nu.map(!_).toArray, opts))
-      catch { case _: Forecast.InsufficientData | _: Forecast.ComputationError => None }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), insUdf(col("_vs"), col("_nu")).as("_o"))
-      .filter(col("_o").isNotNull)
+    Series.mapSeries(df, groupCol, dsCol, yCol)(s =>
+      Some(graft.kernels.Introspect.inspect(s.vs, s.valid, opts)))
       .select(col(groupCol), col("_o.*"))
   }
 
@@ -100,18 +76,13 @@ object TsForecastOp {
                         method: String, horizon: Int,
                         params: Map[String, String] = Map.empty): DataFrame = {
     val opts = Forecast.optionsFromParams(method, horizon, params)
-    val exUdf = udf((vs: Seq[Double], nu: Seq[Boolean]) => {
-      try {
-        val e = graft.kernels.Introspect.explain(vs.toArray, nu.map(!_).toArray, horizon, opts)
-        Some(e.forecast_step.indices.map(i =>
-          (e.forecast_step(i), e.level(i), e.trend(i), e.seasonal(i), e.residual(i), e.model_name)))
-      } catch { case _: Forecast.InsufficientData | _: Forecast.ComputationError => None }
-    })
-    Series.gather(df, groupCol, dsCol, yCol)
-      .select(col(groupCol), explode(exUdf(col("_vs"), col("_nu"))).as("_r"))
-      .select(col(groupCol), col("_r._1").as("forecast_step"), col("_r._2").as("level"),
-        col("_r._3").as("trend"), col("_r._4").as("seasonal"),
-        col("_r._5").as("residual"), col("_r._6").as("model_name"))
+    Series.flatMapSeries(df, groupCol, dsCol, yCol) { s =>
+      val e = graft.kernels.Introspect.explain(s.vs, s.valid, horizon, opts)
+      e.forecast_step.indices.map(i =>
+        (e.forecast_step(i), e.level(i), e.trend(i), e.seasonal(i), e.residual(i), e.model_name))
+    }.select(col(groupCol), col("_o._1").as("forecast_step"), col("_o._2").as("level"),
+        col("_o._3").as("trend"), col("_o._4").as("seasonal"),
+        col("_o._5").as("residual"), col("_o._6").as("model_name"))
   }
 
   /** ts_forecast (single series, ts_macros.cpp:539-566): one row of arrays
@@ -119,30 +90,10 @@ object TsForecastOp {
   def forecastSingle(df: DataFrame, dsCol: String, yCol: String, method: String,
                      horizon: Int, params: Map[String, String] = Map.empty): DataFrame = {
     val opts = Forecast.optionsFromParams(method, horizon, params)
-    val dsType = df.schema(dsCol).dataType
-    val gathered = df
-      .filter(col(dsCol).isNotNull)
-      .agg(sort_array(collect_list(struct(
-        Series.toMicros(col(dsCol), dsType).as("t"),
-        coalesce(col(yCol).cast(DoubleType), lit(Double.NaN)).as("v"),
-        col(yCol).isNull.as("nu")))).as("_s"))
-      .select(col("_s.t").as("_ts"), col("_s.v").as("_vs"), col("_s.nu").as("_nu"))
-
-    val fc = udf((ts: Seq[Long], vs: Seq[Double], nu: Seq[Boolean]) => {
-      try {
-        val out = Forecast.forecast(vs.toArray, nu.map(!_).toArray, opts)
-        Some(SingleOut(out.point.toSeq, out.lower.toSeq, out.upper.toSeq, out.modelName,
-          out.aic, out.bic))
-      } catch {
-        case _: Forecast.InsufficientData | _: Forecast.ComputationError => None
-      }
-    })
-    gathered.select(fc(col("_ts"), col("_vs"), col("_nu")).as("_o"))
-      .filter(col("_o").isNotNull)
-      .select(col("_o.point_forecasts").as("point_forecasts"),
-        col("_o.lower_bounds").as("lower_bounds"),
-        col("_o.upper_bounds").as("upper_bounds"),
-        col("_o.model_name").as("model_name"),
-        col("_o.aic").as("aic"), col("_o.bic").as("bic"))
+    Series.mapSeries(df.withColumn("_g", lit(1)), "_g", dsCol, yCol) { s =>
+      val out = Forecast.forecast(s.vs, s.valid, opts)
+      Some(SingleOut(out.point.toSeq, out.lower.toSeq, out.upper.toSeq, out.modelName,
+        out.aic, out.bic))
+    }.select(col("_o.*"))
   }
 }

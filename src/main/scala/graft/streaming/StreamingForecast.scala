@@ -66,12 +66,9 @@ object StreamingForecast {
           val vs = merged.map(_._2)
           state.update(SeriesState(ts, vs))
           if (vs.length < 3) Iterator.empty
-          else {
-            try {
-              val out = Forecast.forecast(vs, Array.fill(vs.length)(true), opts)
-              Iterator.single(ForecastUpdate(key, vs.length, out.point.toSeq, out.modelName))
-            } catch { case _: Forecast.FcError => Iterator.empty }
-          }
+          else graft.ops.Series.skipOnDataError(
+              Forecast.forecast(vs, Array.fill(vs.length)(true), opts)).iterator
+            .map(out => ForecastUpdate(key, vs.length, out.point.toSeq, out.modelName))
       }
   }
 }

@@ -129,4 +129,24 @@ class NativeTopKSpec extends AnyFunSuite with BeforeAndAfterAll {
       .count()
     assert(mismatches == 0)
   }
+
+  test("SortedArrayAnyInRange: a nullable array fails analysis, the collect_set form type-checks") {
+    val sp = spark
+    import sp.implicits._
+    def anyInRange(arr: org.apache.spark.sql.Column, lo: Long, hi: Long) =
+      B.column(graft.functions.SortedArrayAnyInRange(B.expression(arr),
+        B.expression(lit(lo)), B.expression(lit(hi))))
+    // the span-dedup caller's shape: sort_array(collect_set(non-null long))
+    val starts = Seq((1L, 3L), (1L, 10L), (2L, 5L)).toDF("id", "p")
+      .groupBy("id").agg(sort_array(collect_set(col("p"))).as("cov"))
+    val hits = starts.select(col("id"), anyInRange(col("cov"), 4L, 9L).as("hit"))
+      .as[(Long, Boolean)].collect().toMap
+    assert(hits == Map(1L -> false, 2L -> true))
+    // a possibly-null element would be read as garbage by getLong
+    val nullable = Seq(1L).toDF("id")
+      .select(array(lit(3L), lit(null).cast("bigint")).as("cov"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      nullable.select(anyInRange(col("cov"), 0L, 5L)))
+    assert(e.getMessage.contains("sorted_array_any_in_range"), e.getMessage)
+  }
 }

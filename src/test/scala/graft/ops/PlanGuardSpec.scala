@@ -1002,25 +1002,53 @@ class PlanGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("flagship forecast: one shuffle on the group key, no cartesian") {
-    val df = graft.ops.TsForecastOp.forecastBy(
-      events
-        .groupBy(org.apache.spark.sql.functions.col("event_type").as("g"),
-          org.apache.spark.sql.functions.col("ts").cast(
-            org.apache.spark.sql.types.DateType).as("ds"))
-        .agg(org.apache.spark.sql.functions.sum("value").as("y")),
-      "g", "ds", "y", "SeasonalNaive", 7, "1d", Map("seasonal_period" -> "7"))
-    val plan = df.queryExecution.executedPlan
-    assert(!plan.toString.contains("CartesianProduct"),
-      "per-series forecasting must never cross-join")
+    import org.apache.spark.sql.functions.col
+    val series = events
+      .groupBy(col("event_type").as("g"),
+        col("ts").cast(org.apache.spark.sql.types.DateType).as("ds"))
+      .agg(org.apache.spark.sql.functions.sum("value").as("y"))
+    val seasonal = Map("seasonal_period" -> "7")
+    // every consumer of the per-series runner (Series.mapSeries/flatMapSeries)
+    val consumers: Seq[(String, org.apache.spark.sql.DataFrame)] = Seq(
+      "forecastBy" -> TsForecastOp.forecastBy(series, "g", "ds", "y", "SeasonalNaive", 7, "1d",
+        seasonal),
+      "forecastInspectBy" -> TsForecastOp.forecastInspectBy(series, "g", "ds", "y", "AutoETS",
+        seasonal),
+      "forecastExplainBy" -> TsForecastOp.forecastExplainBy(series, "g", "ds", "y", "ETS",
+        7, seasonal),
+      "forecastSingle" -> TsForecastOp.forecastSingle(series.filter(col("g") === "view"),
+        "ds", "y", "SeasonalNaive", 7, seasonal),
+      "statsBy" -> TsStatsOp.statsBy(series, "g", "ds", "y", "1d"),
+      "dataQualityBy" -> TsStatsOp.dataQualityBy(series, "g", "ds", "y"),
+      "detectChangepointsBy" -> TsChangepointOp.detectChangepointsBy(series, "g", "ds", "y"),
+      "bayesianBy" -> TsChangepointOp.bayesianBy(series, "g", "ds", "y"),
+      "peltBy" -> TsChangepointOp.peltBy(series, "g", "ds", "y"),
+      "mstlDecompositionBy" -> TsDecompositionOp.mstlDecompositionBy(series, "g", "ds", "y",
+        Seq(7)),
+      "decomposeSeasonalBy" -> TsDecompositionOp.decomposeSeasonalBy(series, "g", "ds", "y", 7),
+      "detrendBy" -> TsDecompositionOp.detrendBy(series, "g", "ds", "y"),
+      "detectPeriodsBy" -> TsDecompositionOp.detectPeriodsBy(series, "g", "ds", "y"),
+      "detectPeaksBy" -> TsDecompositionOp.detectPeaksBy(series, "g", "ds", "y"),
+      "analyzePeakTimingBy" -> TsDecompositionOp.analyzePeakTimingBy(series, "g", "ds", "y", 7.0),
+      "analyzeSeasonalityBy" -> TsDecompositionOp.analyzeSeasonalityBy(series, "g", "ds", "y"),
+      "classifySeasonalityBy" -> TsDecompositionOp.classifySeasonalityBy(series, "g", "ds", "y",
+        7),
+      "featuresBy" -> TsFeaturesOp.featuresBy(series, "g", "ds", "y"))
     // r11: the gather exchange must carry an EXPLICIT partition count
     // (REPARTITION_BY_NUM) — AQE's byte-based coalescing otherwise folds
     // the tiny gathered-series table to ONE partition and the whole
     // per-series kernel stage runs on a single core (measured: the AutoETS
     // bench stage at 2.2 s wall ≈ its 2.3 s single-thread kernel CPU).
     import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
-    assert(plan.collect {
+    consumers.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
+      assert(!plan.toString.contains("CartesianProduct"),
+        s"$name: per-series operators must never cross-join")
+      val pinned = plan.collect {
         case s: ShuffleExchangeExec if s.shuffleOrigin == REPARTITION_BY_NUM => s
-      }.nonEmpty,
-      s"the series gather must pin its partition count against AQE coalescing:\n$plan")
+      }
+      assert(pinned.length == 1,
+        s"$name: the series gather must be ONE exchange with a pinned partition count:\n$plan")
+    }
   }
 }
